@@ -12,15 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Silence the `No Partition Defined for Window operation!` warning
     // ONLY: every remaining global-order window in the library reads a
@@ -122,11 +115,13 @@ object Bench {
     // adjudication traced the driver's empty PERF per_query to exactly
     // that overwrite
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_out_c$cpus.json")
+    // JSON numbers need a '.' decimal point whatever the JVM locale
+    def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val priorJson = results.flatMap { case (k, _) =>
       prior.get(k).map(p => "\"" + k + "\":" + p)
     }.mkString("{", ",", "}")
     val deltaJson = results.flatMap { case (k, v) =>
-      prior.get(k).map(p => f""""$k":${v - p}%.3f""")
+      prior.get(k).map(p => "\"" + k + "\":" + ms(v - p))
     }.mkString("{", ",", "}")
     if (only.isEmpty) {
       // failed queries keep their prior history entry (a crash's
@@ -152,12 +147,12 @@ object Bench {
     // core-count scaling (PERF r16 had per_query empty for this exact
     // reason). Timing methodology unchanged.
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val qsMs = results.map { case (k, v) => f""""$k":$v%.3f""" }
+    val qsMs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""prior":$priorJson,"delta":$deltaJson,"failed":$failedJson,"sf":"$sfDir"}"""
-    val short = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qsMs,""" +
-      f""""n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir","detail":"$benchOut"}"""
+    val short = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsMs,""" +
+      s""""n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir","detail":"$benchOut"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), full + "\n")
     // silence shutdown-path logging (EventLoop interrupt stacks at
     // stop() previously corrupted the output tail), stop Spark FIRST,

@@ -27,11 +27,6 @@ object Tables {
     }
   }
 
-  /** events.parquet carries TIMESTAMP(NANOS), which Spark's parquet
-    * reader only accepts as a raw long (`legacy.parquet.nanosAsLong`,
-    * set in Verify/Bench/test sessions). Normalize to a microsecond
-    * TimestampType column so downstream operators are oblivious.
-    */
   /** Fan a narrow source out to the session's parallelism — ONLY when
     * it is actually narrow. The driver's testdata writes each table as
     * one parquet row group, so every scan yields ONE partition and a
@@ -69,6 +64,11 @@ object Tables {
     if (narrow) df.repartition(target) else df
   }
 
+  /** events.parquet carries TIMESTAMP(NANOS), which Spark's parquet
+    * reader only accepts as a raw long (`legacy.parquet.nanosAsLong`,
+    * set by [[graft.Session.builder]]). Normalize to a microsecond
+    * TimestampType column so downstream operators are oblivious.
+    */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** dev tool: dump the EXECUTED plan string (incl. WholeStageCodegen
@@ -8,16 +7,11 @@ import graft.SparkEntry
 object PlanStr {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Session.builder(4)
       // AQE wraps the plan in AdaptiveSparkPlanExec, which hides
       // WholeStageCodegen spans from toString/debugCodegen until the
       // final plan — disable it for this diagnostic dump only
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { n =>

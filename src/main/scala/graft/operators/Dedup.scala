@@ -368,8 +368,8 @@ object Dedup {
   def qNgramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramStages(spark, dir).last._2
 
-  /** The d4 pipeline cut at its stage boundaries (probe surface for
-    * [[graft.dev.NgramProbe]]); the last entry is the full query. */
+  /** The d4 pipeline cut at its stage boundaries; the last entry is
+    * the full query. */
   private[graft] def ngramStages(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")

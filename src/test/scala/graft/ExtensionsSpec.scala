@@ -24,6 +24,15 @@ class ExtensionsSpec extends AnyFunSuite {
       // codegen path actually engages (no fallback warnings → hard to
       // assert directly; at least the expression survives a filter)
       assert(df.where(expr("graft_dot(a, b) > 0")).count() == 1)
+      // the whole native table is injected, so register() is a no-op
+      // here and never stacks a second copy of the injected rewrites
+      val registry = spark.sessionState.functionRegistry
+      Session.functions.foreach { case (id, _, _) =>
+        assert(registry.functionExists(id), s"${id.funcName} not injected")
+      }
+      graft.functions.GraftFunctions.register(spark)
+      assert(spark.experimental.extraOptimizations.isEmpty)
+      assert(spark.experimental.extraStrategies.isEmpty)
     } finally spark.stop()
   }
 
@@ -144,6 +153,18 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT graft_geohash8(CAST(524288 AS BIGINT), CAST(524288 AS BIGINT)) AS g")
         .head().getString(0)
       assert(gh.length == 8 && gh == "s0000000")
+      // a second register() installs nothing twice: every table name
+      // stays callable and each rewrite and the strategy appear once
+      graft.functions.GraftFunctions.register(spark)
+      graft.functions.GraftFunctions.register(spark)
+      val registry = spark.sessionState.functionRegistry
+      Session.functions.foreach { case (id, _, _) =>
+        assert(registry.functionExists(id), s"${id.funcName} not registered")
+      }
+      Session.rules.foreach(r =>
+        assert(spark.experimental.extraOptimizations.count(_ eq r) == 1, r.ruleName))
+      Session.strategies.foreach(st =>
+        assert(spark.experimental.extraStrategies.count(_ eq st) == 1, st.toString))
     } finally spark.stop()
   }
 

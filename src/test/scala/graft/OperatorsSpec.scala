@@ -28,6 +28,12 @@ class OperatorsSpec extends SparkTestBase {
   test("every oracle key has a query") {
     val qs = SparkEntry.queries.keySet
     SparkEntry.oracleSql.keySet.foreach(k => assert(qs(k), s"oracle $k lacks query"))
+    // the rows-only queries (approximate sketches and media paths with
+    // no SQL twin) are gated by their own specs; any other query
+    // without an oracle is a registry slip
+    assert((qs -- SparkEntry.oracleSql.keySet) == Set(
+      "q_approx_distinct", "q_approx_quantiles", "q_media_batched", "q_media_e2e",
+      "q_media_pipeline", "q_phash_dedup", "q_profile_approx", "q_shot_detect"))
   }
 
   test("q5_join broadcasts the dimension tables") {

@@ -451,8 +451,8 @@ class PlanAuditSpec extends SparkTestBase {
     // of sorting the 7× expanded stream (measured 2.7× at sf0.1);
     // per-column rescans beyond these two would multiply the 100 TB
     // pass count
-    val prof = operators.OpsAudit.qProfile(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val profPlan = operators.OpsAudit.qProfile(spark, sfDir).queryExecution.executedPlan
+    val prof = profPlan.toString
     assert("Scan parquet".r.findAllIn(prof).size == 2,
       s"q_profile must profile off one Expand scan + one string-bounds scan:\n$prof")
     assert(prof.contains("Expand"),
@@ -460,17 +460,23 @@ class PlanAuditSpec extends SparkTestBase {
     // the Expand path must never fall back to sort-based aggregation —
     // the r16 finding: ONE immutable (string) min/max buffer demoted
     // every phase of the profile aggregate to SortAggregate + a full
-    // sort of the 7× expanded stream. Assert the guarded PROPERTY
-    // (r17, advisor): at most the two grouping-free string-bounds
-    // phases may stay sort-based (they sort NOTHING — no Sort node is
-    // planned for a global aggregate), and zero Sort operators exist
-    // anywhere in the plan. A Spark upgrade that hash-aggregates
-    // string min/max (SortAggregate count 0) passes; a demotion that
-    // re-sorts the Expand stream trips the Sort-node check.
+    // sort of the 7× expanded stream. Assert the guarded PROPERTY: at
+    // most the two string-bounds phases may stay sort-based, each
+    // grouping-free (a global aggregate sorts NOTHING — no Sort node is
+    // planned for it), and no Sort exists below the top-level
+    // presentation sort of the 6 output rows. A Spark upgrade that
+    // hash-aggregates string min/max (SortAggregate count 0) passes; a
+    // demotion that re-sorts the Expand stream trips both checks.
     assert("SortAggregate".r.findAllIn(prof).size <= 2,
       s"q_profile's Expand path fell back to SortAggregate:\n$prof")
-    assert("Sort \\[".r.findAllIn(prof).isEmpty,
-      s"q_profile must not sort any stream:\n$prof")
+    assert("SortAggregate\\(key=\\[[^\\]]".r.findFirstIn(prof).isEmpty,
+      s"q_profile's sort-based aggregates must be grouping-free:\n$prof")
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val presented = profPlan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case p => p }
+    val belowPresentation = presented match { case s: SortExec => s.child; case p => p }
+    assert(belowPresentation.collect { case s: SortExec => s }.isEmpty,
+      s"q_profile must not sort below its presentation sort:\n$prof")
     // c62: every dim-parent FK probe is a broadcast left join — the
     // child never shuffles to check a dimension
     val fk = operators.OpsAudit.qFkAudit(spark, sfDir)
